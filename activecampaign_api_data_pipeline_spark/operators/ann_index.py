@@ -37,7 +37,6 @@ no ANN at all — this is part of the LLM-pipeline extension family
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -46,8 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from activecampaign_api_data_pipeline_spark.storage import (
-    read_text_sidecar,
-    write_text_sidecar,
+    commit_swap,
+    mark_building,
+    path_exists,
+    probe_params,
+    read_params,
+    write_params,
 )
 
 from activecampaign_api_data_pipeline_spark.operators.similarity import (
@@ -112,15 +115,10 @@ def build_ann_index(
     spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
 
-    # Invalidate any existing sidecar FIRST: the sidecar is the completeness
-    # marker (written last), so a crash mid-rebuild must not leave an old
-    # params.json beside partially rewritten artifacts — ensure_ann_index
-    # would accept that mix as a complete index.
-    # ``_building_`` is not an AnnIndexParams field, so load_ann_params
-    # raises on it and ensure_ann_index treats the index as incomplete.
-    write_text_sidecar(
-        spark, f"{path}/params.json", json.dumps({"_building_": True})
-    )
+    # Invalidate any existing sidecar FIRST (the kernel's building marker):
+    # a crash mid-rebuild must not leave old params beside partially
+    # rewritten artifacts, which ensure_ann_index would accept as complete
+    mark_building(spark, path)
     _clear_tombstones(spark, path)
 
     # 1. coarse quantizer (cosine k-means)
@@ -176,17 +174,12 @@ def build_ann_index(
         )
 
     params = AnnIndexParams(n_centroids, m, ksub, n_iters, dim, residual, id_col, vec_col)
-    # params sidecar: one-line JSON, direct-FS single file (works on any
-    # DFS; reads also accept the legacy Spark-text directory layout)
-    write_text_sidecar(spark, f"{path}/params.json", json.dumps(params.to_dict()))
+    write_params(spark, path, params.to_dict())
     return params
 
 
 def load_ann_params(spark: SparkSession, path: str) -> AnnIndexParams:
-    raw = read_text_sidecar(spark, f"{path}/params.json")
-    if raw is None:
-        raise FileNotFoundError(f"no params sidecar at {path}/params.json")
-    return AnnIndexParams(**json.loads(raw))
+    return AnnIndexParams(**read_params(spark, path))
 
 
 def append_ann_index(new_emb: DataFrame, path: str) -> None:
@@ -337,8 +330,6 @@ def _live_cells(spark: SparkSession, path: str, p: AnnIndexParams) -> DataFrame:
     through ``cells`` (the gate feeding ``_adc_topk``'s ``cand``), so
     one broadcast anti-join here hides deleted vectors from ALL reads
     immediately — codes rows for them simply never match a candidate."""
-    from activecampaign_api_data_pipeline_spark.storage import path_exists
-
     cells = spark.read.parquet(f"{path}/cells")
     if path_exists(spark, f"{path}/tombstones"):
         tomb = spark.read.parquet(f"{path}/tombstones").select(p.id_col).distinct()
@@ -385,13 +376,12 @@ def vacuum_ann_index(spark: SparkSession, path: str) -> None:
     clear the ledger — the LSM-style reclaim that bounds the per-search
     anti-join cost after many deletes.
 
-    Crash-safe via the staging/rename discipline shared with every
-    compaction in this repo (recovery branch BEFORE any delete: live
-    missing + staging present → staging renames back in). The ledger is
-    removed LAST, so every intermediate crash state still reads
-    correctly: until both artifact swaps complete, the surviving
-    tombstones keep hiding the ids (the anti-join is simply vacuous for
-    an already-vacuumed artifact), and a re-run completes the job."""
+    Each artifact is replaced through ``storage.commit_swap`` (crash
+    healing included). The ledger is removed LAST, so every
+    intermediate crash state still reads correctly: until both artifact
+    swaps complete, the surviving tombstones keep hiding the ids (the
+    anti-join is simply vacuous for an already-vacuumed artifact), and a
+    re-run completes the job."""
     p = load_ann_params(spark, path)
     _vacuum_artifacts(spark, path, p.id_col, ("cells", "codes"))
 
@@ -399,41 +389,27 @@ def vacuum_ann_index(spark: SparkSession, path: str) -> None:
 def _vacuum_artifacts(
     spark: SparkSession, path: str, id_col: str, arts: tuple
 ) -> None:
-    from activecampaign_api_data_pipeline_spark.storage import path_exists
-
     if not path_exists(spark, f"{path}/tombstones"):
         return
     tomb = F.broadcast(
         spark.read.parquet(f"{path}/tombstones").select(id_col).distinct()
     )
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
     for art in arts:
         live = f"{path}/{art}"
-        staging, old = f"{live}__compacting", f"{live}__old"
-        if not fs.exists(P(live)):
-            if fs.exists(P(staging)):  # crashed between the two renames
-                fs.rename(P(staging), P(live))
-                # Fall through and re-vacuum against the CURRENT ledger
-                # (vacuous if already applied): the restored staging was
-                # built from the ledger AS OF the crashed run, so any
-                # tombstones appended since must still be absorbed before
-                # the ledger delete below — `continue` here would erase
-                # them unapplied, silently resurrecting deleted vectors.
-            else:
-                raise FileNotFoundError(f"vacuum: no artifact at {live}")
-        if fs.exists(P(old)):
-            fs.delete(P(old), True)
-        if fs.exists(P(staging)):
-            fs.delete(P(staging), True)
-        kept = spark.read.parquet(live).join(tomb, id_col, "left_anti")
-        kept.write.mode("overwrite").parquet(staging)
-        fs.rename(P(live), P(old))
-        fs.rename(P(staging), P(live))
-        fs.delete(P(old), True)
-    fs.delete(P(f"{path}/tombstones"), True)
+
+        def write(staging: str, live=live) -> None:
+            kept = spark.read.parquet(live).join(tomb, id_col, "left_anti")
+            kept.write.mode("overwrite").parquet(staging)
+
+        # a staging copy restored by the heal was built from the ledger AS
+        # OF the crashed run; the swap goes on and re-vacuums it against
+        # the CURRENT ledger (vacuous if already applied), so tombstones
+        # appended since are absorbed before the ledger delete below —
+        # skipping the write would erase them unapplied and resurrect
+        # deleted vectors
+        if not commit_swap(spark, live, write):
+            raise FileNotFoundError(f"vacuum: no artifact at {live}")
+    _clear_tombstones(spark, path)
 
 
 def delete_sq8_index(spark: SparkSession, path: str, ids) -> None:
@@ -530,21 +506,31 @@ def ensure_ann_index(
     must not match a differently-built index — ``residual=False`` rejects a
     ``residual=True`` index even though the caller never said ``residual``).
     ``dim`` is learned by the build, so it is excluded from the comparison.
-    A crashed rebuild cannot false-match: :func:`build_ann_index` rewrites
-    the sidecar with an unparsable marker before touching any artifact.
+    A crashed rebuild cannot false-match: :func:`build_ann_index` writes
+    the kernel's building marker before touching any artifact.
     """
-    spark = emb.sparkSession
-    requested = AnnIndexParams(**params).to_dict()
-    requested.pop("dim")
-    try:
-        existing = load_ann_params(spark, path).to_dict()
-        existing.pop("dim")
-        if existing == requested:
-            return path
-    except Exception:
-        pass  # absent, unreadable, or mid-rebuild marker -> build
-    build_ann_index(emb, path, **params)
+    if not _matches(emb.sparkSession, path, AnnIndexParams, params):
+        build_ann_index(emb, path, **params)
     return path
+
+
+def _matches(spark: SparkSession, path: str, cls, params: dict) -> bool:
+    """Whether the store at ``path`` is complete (``storage.probe_params``
+    — only an absent, marker or unparsable sidecar reads as incomplete;
+    IO errors raise) and was built with ``cls(**params)``, defaults
+    filled in and the build-learned ``dim`` excluded. A sidecar whose
+    fields do not fit ``cls`` is a mismatch."""
+    existing = probe_params(spark, path)
+    if existing is None:
+        return False
+    try:
+        existing = cls(**existing).to_dict()
+    except TypeError:
+        return False
+    requested = cls(**params).to_dict()
+    existing.pop("dim")
+    requested.pop("dim")
+    return existing == requested
 
 
 # ---------------------------------------------------------------------------
@@ -584,24 +570,19 @@ def build_sq8_index(
 
     spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
-    write_text_sidecar(
-        spark, f"{path}/params.json", json.dumps({"_building_": True})
-    )
+    mark_building(spark, path)
     _clear_tombstones(spark, path)
 
     stats = _write(sq8_stats(emb, id_col, vec_col), f"{path}/stats")
     _write(sq8_encode(emb, stats, id_col, vec_col), f"{path}/codes")
 
     params = Sq8IndexParams(dim, id_col, vec_col)
-    write_text_sidecar(spark, f"{path}/params.json", json.dumps(params.to_dict()))
+    write_params(spark, path, params.to_dict())
     return params
 
 
 def load_sq8_params(spark: SparkSession, path: str) -> Sq8IndexParams:
-    raw = read_text_sidecar(spark, f"{path}/params.json")
-    if raw is None:
-        raise FileNotFoundError(f"no params sidecar at {path}/params.json")
-    return Sq8IndexParams(**json.loads(raw))
+    return Sq8IndexParams(**read_params(spark, path))
 
 
 def append_sq8_index(new_emb: DataFrame, path: str) -> None:
@@ -638,8 +619,6 @@ def sq8_search_index(
         _sq8_dist,
         sq8_encode,
     )
-
-    from activecampaign_api_data_pipeline_spark.storage import path_exists
 
     p = load_sq8_params(spark, path)
     stats = spark.read.parquet(f"{path}/stats")
@@ -682,15 +661,6 @@ def ensure_sq8_index(emb: DataFrame, path: str, **params) -> str:
     exists (same completeness contract as :func:`ensure_ann_index`: the
     sidecar must parse as full default-filled params, ``dim`` excluded;
     a mid-rebuild ``_building_`` marker never false-matches)."""
-    spark = emb.sparkSession
-    requested = Sq8IndexParams(**params).to_dict()
-    requested.pop("dim")
-    try:
-        existing = load_sq8_params(spark, path).to_dict()
-        existing.pop("dim")
-        if existing == requested:
-            return path
-    except Exception:
-        pass  # absent, unreadable, or mid-rebuild marker -> build
-    build_sq8_index(emb, path, **params)
+    if not _matches(emb.sparkSession, path, Sq8IndexParams, params):
+        build_sq8_index(emb, path, **params)
     return path

@@ -25,9 +25,11 @@ from pyspark.sql import functions as F
 from activecampaign_api_data_pipeline_spark.functions.hashing import hash60, with_row_hash
 from activecampaign_api_data_pipeline_spark.functions.text import word_ngrams
 from activecampaign_api_data_pipeline_spark.storage import (
+    mark_building,
     path_exists,
-    read_text_sidecar,
-    write_text_sidecar,
+    probe_params,
+    read_params,
+    write_params,
 )
 
 #: Mersenne prime modulus for the universal-hash permutations. Small enough
@@ -569,18 +571,13 @@ def build_cc_store(edges: DataFrame, path: str) -> None:
     the day's data). ``labels`` holds ``(node, label)`` with label = the
     component's min node id, computed by
     :func:`largestar_smallstar_components`; the ``params.json`` sidecar
-    follows the crash-safe ``_building_`` marker protocol."""
-    import json
-
+    follows the kernel's building-marker protocol (``mark_building``
+    first, ``write_params`` last)."""
     spark = edges.sparkSession
-    write_text_sidecar(
-        spark, f"{path}/params.json", json.dumps({"_building_": True})
-    )
+    mark_building(spark, path)
     labels = largestar_smallstar_components(edges)
     labels.write.mode("overwrite").parquet(f"{path}/labels")
-    write_text_sidecar(
-        spark, f"{path}/params.json", json.dumps({"kind": "cc_labels"})
-    )
+    write_params(spark, path, {"kind": "cc_labels"})
 
 
 def append_cc_edges(new_edges: DataFrame, path: str) -> None:
@@ -740,12 +737,8 @@ def decontam_store_build(
     shingle costs O(df_train × df_test_small) in the join, which the
     per-batch bound keeps linear in batch size.
     """
-    import json as _json
-
     spark = test_docs.sparkSession
-    write_text_sidecar(
-        spark, f"{path}/params.json", _json.dumps({"_building_": True})
-    )
+    mark_building(spark, path)
     te = (
         _shingle_sets(test_docs, id_col, text_col, ngram)
         .select(F.col("doc_id").alias("test_id"), F.explode("shingles").alias("s"))
@@ -764,11 +757,7 @@ def decontam_store_build(
     te.groupBy("test_id").agg(F.count("*").alias("n_test")).write.mode(
         "overwrite"
     ).parquet(f"{path}/sizes")
-    write_text_sidecar(
-        spark,
-        f"{path}/params.json",
-        _json.dumps({"ngram": ngram, "max_df": max_df}),
-    )
+    write_params(spark, path, {"ngram": ngram, "max_df": max_df})
 
 
 def ensure_decontam_store(
@@ -781,18 +770,13 @@ def ensure_decontam_store(
     """Build the eval-set store at ``path`` unless a complete one with the
     SAME (ngram, max_df) already exists — the build-once/check-many shape
     (same ensure semantics as ``ensure_ann_index``: the sidecar is the
-    completeness marker, a mid-rebuild `_building_` sidecar or a param
-    mismatch triggers a rebuild)."""
-    import json as _json
-
-    spark = test_docs.sparkSession
-    try:
-        existing = _json.loads(read_text_sidecar(spark, f"{path}/params.json"))
-        if existing.get("ngram") == ngram and existing.get("max_df") == max_df:
-            return path
-    except Exception:
-        pass  # absent or unreadable -> build
-    decontam_store_build(test_docs, path, ngram=ngram, max_df=max_df, **build_kw)
+    completeness marker, ``storage.probe_params`` reads an absent or
+    mid-rebuild sidecar as incomplete, and a param mismatch triggers a
+    rebuild; IO errors raise)."""
+    existing = probe_params(test_docs.sparkSession, path)
+    want = {"ngram": ngram, "max_df": max_df}
+    if existing is None or {k: existing.get(k) for k in want} != want:
+        decontam_store_build(test_docs, path, ngram=ngram, max_df=max_df, **build_kw)
     return path
 
 
@@ -813,11 +797,8 @@ def incremental_decontaminate(
     are never re-read. Returns (train_id, test_id, n_common,
     containment) like the batch operator.
     """
-    import json as _json
-
     spark = new_docs.sparkSession
-    raw = read_text_sidecar(spark, f"{path}/params.json")
-    params = _json.loads(raw) if raw is not None else {}
+    params = probe_params(spark, path) or {}
     if "ngram" not in params:
         raise ValueError(f"decontam store at {path} is incomplete (mid-rebuild?)")
     tr = (
@@ -888,13 +869,11 @@ def _minhash_store_params(
     meant a crash mid-build left a half-written sidecar that wedged the
     store). A partially-written legacy sidecar (empty text dir from a
     crashed pre-r12 coalesce-write) reads as absent and is replaced."""
-    import json as _json
-
     spec = _minhash_spec(num_perm, bands, ngram)
-    raw = read_text_sidecar(spark, f"{path}/params.json")
-    if raw is None:  # absent, or crashed legacy dir-write: no frozen spec
+    try:
+        frozen = read_params(spark, path)
+    except FileNotFoundError:  # absent, or crashed legacy dir-write
         return False
-    frozen = _json.loads(raw)
     if frozen != spec:
         raise ValueError(
             f"minhash store at {path} was built with {frozen};"
@@ -929,31 +908,6 @@ def _legacy_backfill_guard(spark, path: str, num_perm: int, bands: int) -> None:
                 f" stored band index max {mb} >= bands={bands};"
                 " refusing to backfill a mismatched spec"
             )
-
-
-def _write_minhash_params(spark, path: str, spec: dict) -> None:
-    """Atomic sidecar write: Hadoop tmp-file create + rename (the
-    matview ``_write_params`` pattern — r11 advice: the old
-    coalesce(1).write.text left a partial directory on crash). The
-    recursive delete also replaces a legacy DIRECTORY-shaped sidecar
-    (pre-r12 text-dir layout) with the single-file layout;
-    ``spark.read.text`` reads both."""
-    import json as _json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(hconf)
-    tmp, final = P(f"{path}/_building_params.json"), P(f"{path}/params.json")
-    out = fs.create(tmp, True)
-    out.write(bytearray(_json.dumps(spec, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, True)
-    # rename failures can be reported by RETURNING false; the old
-    # sidecar is already deleted, so surface them (storage.write_text_sidecar)
-    if not fs.rename(tmp, final):
-        raise IOError(f"params rename failed: {tmp} -> {final}")
 
 
 def minhash_store_append(
@@ -1004,7 +958,7 @@ def minhash_store_append(
         # (r11 verdict: a later mismatched-banding probe must raise, not
         # silently find no candidates). Written AFTER the sigs append
         # succeeds (sidecar-last), atomically.
-        _write_minhash_params(spark, path, _minhash_spec(num_perm, bands, ngram))
+        write_params(spark, path, _minhash_spec(num_perm, bands, ngram))
 
 
 def incremental_minhash_pairs(
@@ -1055,7 +1009,7 @@ def incremental_minhash_pairs(
         # later mismatched probe raises instead of silently missing —
         # gated on the stored artifacts actually matching this spec
         _legacy_backfill_guard(spark, path, num_perm, bands)
-        _write_minhash_params(spark, path, _minhash_spec(num_perm, bands, ngram))
+        write_params(spark, path, _minhash_spec(num_perm, bands, ngram))
     sh = _shingle_sets(new_docs, id_col, text_col, ngram)
     new_sigs = minhash_signatures(sh, num_perm)
     new_bands = _banded(new_sigs, num_perm, bands)
@@ -1465,9 +1419,7 @@ def span_store_ingest_scrub(
     from activecampaign_api_data_pipeline_spark.operators.matview import (
         append_matview,
         build_matview,
-        load_matview_params,
     )
-    from activecampaign_api_data_pipeline_spark.storage import path_exists
 
     spark = docs.sparkSession
     base = _span_token_table(docs, id_col, text_col).localCheckpoint(eager=True)
@@ -1481,7 +1433,8 @@ def span_store_ingest_scrub(
     # shingle-keyed store is the highest-cardinality store in the repo —
     # min/max/sum of token positions would be three dead bigints per row
     counts = occ.select(F.col("shingle"), F.lit(1).alias("m"))
-    if not path_exists(spark, f"{path}/params.json"):
+    frozen = probe_params(spark, path)
+    if frozen is None:
         # freeze the shingle spec in the sidecar (r10 advice): a later
         # ingest with a different k would silently mix incompatible
         # shingle lengths into one history; a different min_df would
@@ -1491,7 +1444,6 @@ def span_store_ingest_scrub(
             extra_params={"span_k": int(k), "span_min_df": int(min_df)},
         )
     else:
-        frozen = load_matview_params(spark, path)
         if (frozen.get("span_k"), frozen.get("span_min_df")) != (k, min_df):
             raise ValueError(
                 f"span store at {path} was built with k={frozen.get('span_k')}"

@@ -12,10 +12,12 @@ straight from the Flajolet et al. HLL line and the Apache DataSketches
 implementation Spark 3.5+ exposes as ``hll_sketch_agg`` /
 ``hll_union_agg`` / ``hll_sketch_estimate`` (all JVM-side, no Python).
 
-Layout and lifecycle mirror ``operators/matview.py`` verbatim (same
-sidecar protocol, same ``_batch`` replay guard, same crash-safe
-compaction swap); the partial column is the sketch binary instead of
-count/sum/min/max scalars.
+Layout and lifecycle are ``operators/matview.py``'s: the sidecar goes
+through ``storage.write_params``/``read_params``, the replay guard is
+``matview.applied_batches_full`` and compaction is
+``matview.compact_with_fold``. What this store adds is its schema: the
+partial column is the sketch binary instead of count/sum/min/max
+scalars, and the fold is the HLL union.
 
 Estimator fine print (measured, pinned by tests): DataSketches keeps an
 order-dependent HIP estimator on a directly-built sketch but falls back
@@ -53,11 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.operators.matview import (
-    _write_params,
     applied_batches_full,
     compact_with_fold,
-    load_matview_params,
 )
+from activecampaign_api_data_pipeline_spark.storage import read_params, write_params
 
 
 def _sketch_partials(
@@ -89,9 +90,7 @@ def build_hll_view(
     spark = facts.sparkSession
     partials = _sketch_partials(key_cols, col, lg_k, batch_key)(facts)
     partials.write.mode("overwrite").parquet(f"{path}/partials")
-    _write_params(
-        spark, path, {"key_cols": list(key_cols), "col": col, "lg_k": lg_k}
-    )
+    write_params(spark, path, {"key_cols": list(key_cols), "col": col, "lg_k": lg_k})
 
 
 def append_hll_view(
@@ -111,7 +110,7 @@ def append_hll_view(
     # ledger — shared verbatim with the matview (same store layout)
     if not skip_replay_check and batch_key in applied_batches_full(spark, path):
         return False
-    p = load_matview_params(spark, path)
+    p = read_params(spark, path)
     partials = _sketch_partials(p["key_cols"], p["col"], p["lg_k"], batch_key)(
         batch
     )
@@ -124,7 +123,7 @@ def read_hll_view(spark: SparkSession, path: str) -> DataFrame:
     estimate — one aggregate over the partials table (rows ~= keys ×
     batches since the last compaction); fact volume never enters the
     read path. Column ``n_distinct_est`` is a BIGINT."""
-    p = load_matview_params(spark, path)
+    p = read_params(spark, path)
     return (
         spark.read.parquet(f"{path}/partials")
         .groupBy(*p["key_cols"])
@@ -136,11 +135,11 @@ def read_hll_view(spark: SparkSession, path: str) -> DataFrame:
 
 def compact_hll_view(spark: SparkSession, path: str) -> None:
     """Fold all partials into one sketch per key (tag ``__compacted__``)
-    through :func:`matview.compact_with_fold` — the shared crash-safe
-    swap (mid-swap recovery branch, ledger-before-swap) with the HLL
-    union as the fold. The stored binary is the union result itself, so
-    reads are bit-identical before/after (measured: estimate(folded) ==
-    estimate(union of originals))."""
+    through :func:`matview.compact_with_fold` (kernel swap plus the
+    ledger-before-swap policy) with the HLL union as the fold. The
+    stored binary is the union result itself, so reads are bit-identical
+    before/after (measured: estimate(folded) == estimate(union of
+    originals))."""
 
     def fold(partials, p):
         return partials.groupBy(*p["key_cols"]).agg(

@@ -33,6 +33,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from activecampaign_api_data_pipeline_spark.storage import commit_swap
+
 MANIFEST = "_manifest"
 
 
@@ -170,53 +172,32 @@ def optimize_zorder(
     """Re-cluster a table that has taken unclustered appends — the
     ``OPTIMIZE ZORDER`` maintenance step: read the live files (clustered
     base + appended stragglers), rewrite the whole set Morton-ordered
-    through the crash-safe staging/rename swap (the
-    ``compact_text_index`` discipline), then rebuild the manifest so
-    every file is skippable again. Single-writer contract; a reader
-    racing the swap can observe a brief path-not-found and should
-    retry — never duplicate or partial rows.
-
-    Crash recovery (the ``compact_text_index`` branch, checked BEFORE any
-    delete): a crash between ``rename(path→old)`` and
-    ``rename(staging→path)`` leaves the live path missing with a
-    COMPLETE staging copy (staging is only ever renamed in after its
-    write finished) — rename it back in and rebuild its manifest (the
-    crashed run died before writing one), then clear the stale ``__old``.
-    Without this branch a re-run would delete both surviving copies and
-    destroy the table."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = P(path).getFileSystem(hconf)
-    staging, old = f"{path}__optimizing", f"{path}__old"
-    if not fs.exists(P(path)):
-        if fs.exists(P(staging)):
-            fs.rename(P(staging), P(path))
-            _write_manifest(spark, path, col_a, col_b)
-        else:
-            raise FileNotFoundError(
-                f"optimize_zorder: no live table at {path} and no staging copy"
-            )
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
+    into ``<path>__optimizing`` and swap it in through
+    ``storage.commit_swap`` (single-writer contract; crash healing
+    included — a crash between the renames is restored, never deleted),
+    then rebuild the manifest so every file is skippable again. The
+    manifest is this store's policy on top of the swap: it describes the
+    swapped-in files, so it is written AFTER the swap. A crash before it
+    leaves the table without a manifest (plain reads are unaffected;
+    :func:`pruned_read` needs one) until a re-run, which rewrites and
+    re-manifests the restored table."""
     zv = morton_value(F.col(col_a), F.col(col_b), bits)
-    (
-        spark.read.parquet(path)
-        .withColumn("_zv", zv)
-        .repartitionByRange(n_files, F.col("_zv"))
-        .sortWithinPartitions("_zv")
-        .drop("_zv")
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    fs.rename(P(path), P(old))
-    fs.rename(P(staging), P(path))
-    fs.delete(P(old), True)
+
+    def write(staging: str) -> None:
+        (
+            spark.read.parquet(path)
+            .withColumn("_zv", zv)
+            .repartitionByRange(n_files, F.col("_zv"))
+            .sortWithinPartitions("_zv")
+            .drop("_zv")
+            .write.mode("overwrite")
+            .parquet(staging)
+        )
+
+    if not commit_swap(spark, path, write, staging="__optimizing"):
+        raise FileNotFoundError(
+            f"optimize_zorder: no live table at {path} and no staging copy"
+        )
     _write_manifest(spark, path, col_a, col_b)
 
 

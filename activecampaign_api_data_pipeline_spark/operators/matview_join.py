@@ -49,45 +49,26 @@ table views to join views.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from activecampaign_api_data_pipeline_spark.operators import matview as MV
+from activecampaign_api_data_pipeline_spark.storage import (
+    commit_swap,
+    path_exists,
+    probe_params,
+    read_params,
+    write_params,
+)
+
+_SIDES = ("a", "b")
 
 
-def _write_params(spark: SparkSession, path: str, params: dict) -> None:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(P(path))
-    tmp, final = P(f"{path}/_building_params.json"), P(f"{path}/params.json")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    # rename failures can be reported by RETURNING false; the old
-    # sidecar is already deleted, so surface them (storage.write_text_sidecar)
-    if not fs.rename(tmp, final):
-        raise IOError(f"params rename failed: {tmp} -> {final}")
-
-
-def load_join_params(spark: SparkSession, path: str) -> dict:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(P(f"{path}/params.json"))
-    try:
-        data = bytes(
-            stream.readAllBytes()
-            if hasattr(stream, "readAllBytes")
-            else jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    return json.loads(data.decode())
+def _check_side(side: str) -> None:
+    # a raise, not an assert: under ``python -O`` an assert vanishes and a
+    # bad side would write a stray history directory
+    if side not in _SIDES:
+        raise ValueError(f"side must be one of {_SIDES}, got {side!r}")
 
 
 def _spec_source_cols(spec: list[dict]) -> list[str]:
@@ -133,14 +114,14 @@ def create_join_view(
         params["spec"] = list(spec)
     else:
         params["measure"] = measure
-    _write_params(spark, path, params)
+    write_params(spark, path, params)
 
 
 def _applied(spark: SparkSession, path: str, p: dict) -> set[str]:
     """Replay guard: the view's live tags + its compaction ledger + this
     store's empty-delta ledger."""
     got = set(p.get("applied", []))
-    if _exists(spark, f"{path}/view/params.json"):
+    if probe_params(spark, f"{path}/view") is not None:
         got |= MV.applied_batches_full(spark, f"{path}/view")
     return got
 
@@ -149,14 +130,7 @@ def applied_keys(spark: SparkSession, path: str) -> set[str]:
     """Public form of the replay-guard set (side-qualified batch keys):
     lets a single-writer caller — the streaming sink — seed the guard
     ONCE per run and skip the per-append tag scan thereafter."""
-    return _applied(spark, path, load_join_params(spark, path))
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(P(path))
+    return _applied(spark, path, read_params(spark, path))
 
 
 def append_join_side(
@@ -178,9 +152,9 @@ def append_join_side(
     key in the same logical transaction (the ``append_matview``
     contract) — the guard's view-tag scan is one Spark job per append.
     """
-    assert side in ("a", "b")
+    _check_side(side)
     spark = batch.sparkSession
-    p = load_join_params(spark, path)
+    p = read_params(spark, path)
     key = f"{side}:{batch_key}"
     if not skip_applied_check and key in _applied(spark, path, p):
         return False
@@ -199,7 +173,7 @@ def append_join_side(
         # directory has no parquet footers and would break every later
         # history read with UNABLE_TO_INFER_SCHEMA (hypothesis-caught)
         p["applied"] = sorted(set(p.get("applied", [])) | {key})
-        _write_params(spark, path, p)
+        write_params(spark, path, p)
         return True
     (
         # exactly one task per bucket: file sets align 1:1 with the hive
@@ -213,7 +187,7 @@ def append_join_side(
     )
     other = "b" if side == "a" else "a"
     view = f"{path}/view"
-    if _exists(spark, f"{path}/{other}"):
+    if path_exists(spark, f"{path}/{other}"):
         hist = spark.read.option("basePath", f"{path}/{other}").parquet(
             f"{path}/{other}"
         )
@@ -230,7 +204,7 @@ def append_join_side(
         # history) rows, exactly the bound the append already pays
         delta = delta.localCheckpoint(eager=True)
         empty = delta.isEmpty()
-        if not _exists(spark, f"{view}/params.json"):
+        if probe_params(spark, view) is None:
             if spec:
                 MV.build_matview_multi(
                     delta, view, p["group_cols"], spec, batch_key=key
@@ -253,16 +227,16 @@ def append_join_side(
         # no partials row carries this key — ledger it here so a replay
         # against grown opposite history cannot double-count
         p["applied"] = sorted(set(p.get("applied", [])) | {key})
-        _write_params(spark, path, p)
+        write_params(spark, path, p)
     return True
 
 
 def read_join_view(spark: SparkSession, path: str) -> DataFrame:
     """The maintained join-view result — one merge over the view's
     partials (``matview.read_matview``); neither history is scanned."""
-    p = load_join_params(spark, path)
+    read_params(spark, path)
     view = f"{path}/view"
-    if not _exists(spark, f"{view}/params.json"):
+    if probe_params(spark, view) is None:
         # no pair has ever materialized: an empty-but-typed frame would
         # need a schema no history may exist to derive — callers that
         # read before any join delta get an explicit error, not a guess
@@ -278,36 +252,21 @@ def compact_join_history(spark: SparkSession, path: str, side: str) -> None:
     a join), so every future delta is bit-identical; bucket partitioning
     and the in-bucket join-key sort are preserved, and the replay guard
     is untouched because it never consults history dirs (view tags +
-    params ledger only). Crash-safe via the staging/rename discipline,
-    including the mid-swap recovery branch (live missing + staging
-    present → staging renames back in before any delete)."""
-    assert side in ("a", "b")
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    hconf = spark._jsc.hadoopConfiguration()
+    params ledger only). The swap and its crash healing are
+    ``storage.commit_swap``'s."""
+    _check_side(side)
     live = f"{path}/{side}"
-    fs = P(live).getFileSystem(hconf)
-    staging, old = f"{live}__compacting", f"{live}__old"
-    if not fs.exists(P(live)):
-        if fs.exists(P(staging)):  # crashed between the two renames
-            fs.rename(P(staging), P(live))
-            if fs.exists(P(old)):
-                fs.delete(P(old), True)
-            return
+
+    def write(staging: str) -> None:
+        p = read_params(spark, path)
+        hist = spark.read.option("basePath", live).parquet(live).drop("batch")
+        (
+            hist.repartition(int(p["n_buckets"]), "bucket")
+            .sortWithinPartitions(p["join_key"])
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(f"{staging}/batch=__compacted__")
+        )
+
+    if not commit_swap(spark, live, write):
         raise FileNotFoundError(f"compact_join_history: no history at {live}")
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
-    p = load_join_params(spark, path)
-    hist = spark.read.option("basePath", live).parquet(live).drop("batch")
-    (
-        hist.repartition(int(p["n_buckets"]), "bucket")
-        .sortWithinPartitions(p["join_key"])
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{staging}/batch=__compacted__")
-    )
-    fs.rename(P(live), P(old))
-    fs.rename(P(staging), P(live))
-    fs.delete(P(old), True)

@@ -35,9 +35,9 @@ Artifacts under ``<path>/``:
   so distribution drift is an explicit rebuild at a new path. ``df`` is
   NOT frozen — it aggregates from the live postings at search time, so
   appended documents are immediately retrievable with exact tf/df.
-- ``params.json`` — column names; written as a ``_building_`` marker
-  first and finalized last, so a crashed build never false-matches
-  (:func:`ensure_text_index` mirrors ``ensure_sq8_index``).
+- ``params.json`` — column names; the kernel's ``mark_building`` marker
+  is written first and the params last, so a crashed build never
+  false-matches (:func:`ensure_text_index` uses ``probe_params``).
 
 Scoring is the repo's exact-integer BM25 (k1 = 1.2, b = 0.75 in scaled
 integers; the log-free ``(N − df + 1)·10⁶ div (df + 1)`` idf variant) —
@@ -49,7 +49,6 @@ has no retrieval at all — LLM-pipeline extension family).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,8 +57,11 @@ from pyspark.sql import functions as F
 from activecampaign_api_data_pipeline_spark.functions.text import tokens
 from activecampaign_api_data_pipeline_spark.operators.ann_index import _write
 from activecampaign_api_data_pipeline_spark.storage import (
-    read_text_sidecar,
-    write_text_sidecar,
+    commit_swap,
+    mark_building,
+    probe_params,
+    read_params,
+    write_params,
 )
 
 
@@ -157,9 +159,7 @@ def build_text_index(
     Postings land term-hash-bucketed (``tokb`` hive partitions) so every
     later search prunes to the query terms' buckets."""
     spark = docs.sparkSession
-    write_text_sidecar(
-        spark, f"{path}/params.json", json.dumps({"_building_": True})
-    )
+    mark_building(spark, path)
 
     # ONE tokenize pass over the corpus: postings carry everything doclen
     # needs — every token lands in exactly one (tok, doc) row, so
@@ -190,22 +190,19 @@ def build_text_index(
     )
 
     params = TextIndexParams(id_col, text_col, tok_buckets)
-    write_text_sidecar(spark, f"{path}/params.json", json.dumps(params.to_dict()))
+    write_params(spark, path, params.to_dict())
     return params
 
 
-def load_text_params(spark: SparkSession, path: str) -> TextIndexParams:
-    raw = read_text_sidecar(spark, f"{path}/params.json")
-    if raw is None:
-        # absent or crashed-empty sidecar: same "incomplete store" class
-        # the callers already handle (ensure_* rebuilds, streams self-heal)
-        raise ValueError(f"no params sidecar at {path}/params.json")
-    parsed = json.loads(raw)
+def _text_params(parsed: dict) -> TextIndexParams:
     # legacy (pre-r13) sidecars predate the bucketed layout: their
     # postings are flat files, so the absent field means 0 (flat scan),
     # NOT the current build default
-    parsed.setdefault("tok_buckets", 0)
-    return TextIndexParams(**parsed)
+    return TextIndexParams(**{"tok_buckets": 0, **parsed})
+
+
+def load_text_params(spark: SparkSession, path: str) -> TextIndexParams:
+    return _text_params(read_params(spark, path))
 
 
 def append_text_index(new_docs: DataFrame, path: str) -> None:
@@ -274,18 +271,18 @@ def bm25_search_index(
 
 
 def ensure_text_index(docs: DataFrame, path: str, **params) -> str:
-    """Build at ``path`` unless a complete index already exists (sidecar
-    must parse as full default-filled params; a mid-rebuild
-    ``_building_`` marker never false-matches)."""
-    spark = docs.sparkSession
-    requested = TextIndexParams(**params).to_dict()
+    """Build at ``path`` unless a complete index already exists (the
+    kernel probe finds params equal to the full default-filled request;
+    a mid-rebuild marker never false-matches, an IO error raises)."""
+    existing = probe_params(docs.sparkSession, path)
     try:
-        existing = load_text_params(spark, path).to_dict()
-        if existing == requested:
-            return path
-    except Exception:
-        pass
-    build_text_index(docs, path, **params)
+        match = existing is not None and _text_params(
+            existing
+        ) == TextIndexParams(**params)
+    except TypeError:  # a sidecar with fields of another store
+        match = False
+    if not match:
+        build_text_index(docs, path, **params)
     return path
 
 
@@ -313,55 +310,35 @@ def compact_text_index(
     only file count and clustering change. ``stats`` stays untouched
     (the frozen-normalization contract).
 
-    Crash-safe via the same staging/rename discipline as
-    ``storage.compact_artifact`` (write ``__compacting``, rename live
-    aside, rename staging in, drop the old copy — single-writer
-    contract); that helper is not reused directly because it coalesces
-    blindly, and an index wants term-clustered output.
+    Each artifact is replaced through ``storage.commit_swap`` (crash
+    healing included; an absent artifact is skipped). The policy this
+    adds is the term-clustered rewrite and the sidecar-after-swap
+    upgrade above.
     """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
     params = load_text_params(spark, path)
-    for artifact, key in (("postings", "tok"), ("doclen", "doc_id")):
-        live = f"{path}/{artifact}"
-        staging, old = f"{live}__compacting", f"{live}__old"
-        fs = P(live).getFileSystem(hconf)
-        if not fs.exists(P(live)):
-            if fs.exists(P(staging)):  # crashed between the two renames
-                fs.rename(P(staging), P(live))
-            else:
-                continue
-        if fs.exists(P(old)):
-            fs.delete(P(old), True)
-        if fs.exists(P(staging)):
-            fs.delete(P(staging), True)
-        if artifact == "postings":
-            _write_postings_bucketed(
-                spark.read.parquet(live).select("tok", "doc_id", "tf"),
-                staging,
-                tok_buckets,
-                mode="overwrite",
-            )
-        else:
-            (
-                spark.read.parquet(live)
-                .repartitionByRange(files_per_artifact, F.col(key))
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-        fs.rename(P(live), P(old))
-        fs.rename(P(staging), P(live))
-        fs.delete(P(old), True)
+
+    def postings(staging: str) -> None:
+        _write_postings_bucketed(
+            spark.read.parquet(f"{path}/postings").select("tok", "doc_id", "tf"),
+            staging,
+            tok_buckets,
+            mode="overwrite",
+        )
+
+    def doclen(staging: str) -> None:
+        (
+            spark.read.parquet(f"{path}/doclen")
+            .repartitionByRange(files_per_artifact, F.col("doc_id"))
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .parquet(staging)
+        )
+
+    commit_swap(spark, f"{path}/postings", postings)
+    commit_swap(spark, f"{path}/doclen", doclen)
     if params.tok_buckets != tok_buckets:
         # layout upgrade (or re-bucket): record the new bucket count LAST,
         # after the postings swap — every intermediate crash state reads
         # correctly through the old sidecar
         upgraded = TextIndexParams(params.id_col, params.text_col, tok_buckets)
-        write_text_sidecar(
-            spark, f"{path}/params.json", json.dumps(upgraded.to_dict())
-        )
+        write_params(spark, path, upgraded.to_dict())

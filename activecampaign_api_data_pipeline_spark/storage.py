@@ -87,56 +87,80 @@ class PersistResult:
     new_silver_buckets: list[int]
 
 
-def write_text_sidecar(spark: SparkSession, path: str, payload: str) -> None:
-    """One-file text sidecar via direct FileSystem ops — NO Spark job.
+# ---------------------------------------------------------------------------
+# Store commit kernel. Every persisted store (matview, matview_join, HLL,
+# ANN/SQ8 index, text index, dedup stores, z-ordered layouts, the KMV
+# sketch) commits through these functions; each store adds only its own
+# schema and merge policy.
+#
+# - ``params.json`` sidecar: one JSON file per store root, written LAST by
+#   a build (the completeness marker) via tmp file + rename, so a reader
+#   never sees a half-written sidecar. Builds that rewrite artifacts in
+#   place call :func:`mark_building` FIRST, so a crash mid-rebuild leaves
+#   the marker instead of old params beside half-rewritten artifacts.
+# - :func:`probe_params` is the one "complete, or build?" test: only an
+#   absent, marker or unparsable sidecar means build; IO errors raise.
+# - :func:`commit_swap` replaces a directory through staging + two
+#   renames and heals the three crash windows on its next call.
+#
+# Contract: a single WRITER per store (the foreachBatch sinks hold it by
+# construction; batch callers must not run two writers on one path).
+# ---------------------------------------------------------------------------
 
-    Replaces the ``createDataFrame([(json,)]).coalesce(1).write.text(path)``
-    pattern for params.json markers: that shape schedules a full Spark job
-    (driver→executor round-trip, task launch, commit protocol) to move
-    ~100 bytes — locally a fixed ~0.2-0.4 s per call, at 100 TB a
-    cluster-wide barrier per sidecar. The store protocols are unchanged:
-    callers still write a ``_building_`` marker first and finalize last;
-    this writes ``<path>.__tmp__`` and renames over the target, so the
-    crash window (missing/partial sidecar ⇒ store reads as incomplete) is
-    no worse than the old overwrite-commit window. The target may be a
-    legacy DIRECTORY layout (old text-writer output) — deleted before the
-    rename. Same mechanism as the matview/minhash param writers this
-    generalizes; works on any Hadoop FileSystem.
-    """
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    target = P(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    parent = target.getParent()
-    if parent is not None:
-        fs.mkdirs(parent)
-    tmp = P(path + ".__tmp__")
-    out = fs.create(tmp, True)
+PARAMS = "params.json"
+BUILDING = "_building_"
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem owning ``path`` plus the ``Path`` class."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
+def _rename(fs, P, src: str, dst: str) -> None:
+    # Hadoop FileSystem.rename reports some failures (a missing parent on
+    # some implementations, an existing target) by RETURNING false rather
+    # than raising; a swallowed false would leave a store half-committed
+    # with no error surfaced
+    if not fs.rename(P(src), P(dst)):
+        raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def write_params(spark: SparkSession, path: str, params: dict) -> None:
+    """Write ``<path>/params.json`` with direct FileSystem ops — no Spark
+    job (a ``createDataFrame(...).write.text`` schedules a full job to
+    move ~100 bytes). Writes ``params.json.__tmp__`` and renames it over
+    the target; a legacy DIRECTORY-shaped sidecar (old Spark text-writer
+    output) is deleted recursively first. A crash before the rename
+    leaves the old sidecar; a crash after the delete leaves none, which
+    every store reads as incomplete."""
+    fs, P = _fs(spark, path)
+    target = f"{path}/{PARAMS}"
+    tmp = f"{target}.__tmp__"
+    fs.mkdirs(P(path))
+    out = fs.create(P(tmp), True)
     try:
-        out.write(bytearray(payload.encode("utf-8")))
+        out.write(bytearray(json.dumps(params, sort_keys=True).encode("utf-8")))
     finally:
         out.close()
-    if fs.exists(target):
-        fs.delete(target, True)  # recursive: legacy layout is a directory
-    # Hadoop FileSystem.rename reports some failures by RETURNING false
-    # (not raising) — e.g. a missing parent on some implementations. At
-    # this point the old sidecar is already deleted, so a swallowed false
-    # would silently degrade the store to "incomplete" (forcing a
-    # rebuild) with no error surfaced. Make it loud.
-    if not fs.rename(tmp, target):
-        raise IOError(f"sidecar rename failed: {tmp} -> {target}")
+    if fs.exists(P(target)):
+        fs.delete(P(target), True)
+    _rename(fs, P, tmp, target)
 
 
-def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
-    """First non-empty line of a text sidecar — single-file OR legacy
-    directory layout (part-* files from the old Spark text writer) — via
-    direct FileSystem ops, no Spark job. Returns ``None`` when the sidecar
-    is absent or empty (the crashed-legacy-dir-write case); genuine IO
-    errors propagate."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    target = P(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+def mark_building(spark: SparkSession, path: str) -> None:
+    """Replace the sidecar with the ``_building_`` marker before a build
+    rewrites artifacts in place; :func:`probe_params` reads the store as
+    incomplete until the build's final :func:`write_params`."""
+    write_params(spark, path, {BUILDING: True})
+
+
+def _read_sidecar(spark: SparkSession, path: str) -> str | None:
+    """First non-empty line of ``<path>/params.json`` — a single file OR
+    the legacy directory layout (part-* files). ``None`` when absent or
+    empty (a crashed legacy directory write); IO errors propagate."""
+    fs, P = _fs(spark, path)
+    target = P(f"{path}/{PARAMS}")
     if not fs.exists(target):
         return None
     paths = (
@@ -154,7 +178,7 @@ def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
             data = bytes(
                 stream.readAllBytes()
                 if hasattr(stream, "readAllBytes")
-                else jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+                else spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
             )
         finally:
             stream.close()
@@ -162,6 +186,88 @@ def read_text_sidecar(spark: SparkSession, path: str) -> str | None:
             if line.strip():
                 return line
     return None
+
+
+def read_params(spark: SparkSession, path: str) -> dict:
+    """The store's sidecar as a dict; ``FileNotFoundError`` when absent."""
+    raw = _read_sidecar(spark, path)
+    if raw is None:
+        raise FileNotFoundError(f"no params sidecar at {path}/{PARAMS}")
+    return json.loads(raw)
+
+
+def probe_params(spark: SparkSession, path: str) -> dict | None:
+    """Completeness probe: the store's params when it is complete, else
+    ``None`` — the sidecar is absent, the ``_building_`` marker, or not
+    a JSON object. Genuine IO errors propagate: a transient read failure
+    must not masquerade as "no store" and rebuild over an existing one."""
+    raw = _read_sidecar(spark, path)
+    if raw is None:
+        return None
+    try:
+        params = json.loads(raw)
+    except ValueError:
+        return None
+    if not isinstance(params, dict) or BUILDING in params:
+        return None
+    return params
+
+
+def commit_swap(
+    spark: SparkSession,
+    live: str,
+    write,
+    staging: str = "__compacting",
+    create: bool = False,
+) -> bool:
+    """Replace the directory ``live`` with what ``write(staging_path)``
+    writes, so no reader ever sees duplicated or partial data. Returns
+    whether a swap ran.
+
+    Protocol: ``write`` fills ``live + staging``; then ``live`` is renamed
+    to ``live + "__old"``, staging is renamed to ``live``, and ``__old``
+    is deleted. Every call first heals a previous crash:
+
+    - staging beside a live dir is a crashed write: deleted (its data is
+      all still in ``live``);
+    - live missing with staging present is the between-renames window:
+      staging is renamed in (it is only renamed after its write finished)
+      and the call goes on against the restored dir;
+    - ``__old`` beside a live dir is post-swap garbage: deleted.
+
+    When ``live`` is absent and there is nothing to restore, the call
+    returns False without writing, unless ``create``: then ``write``
+    fills ``live + "__tmp"``, which is renamed in (a crash mid-write
+    leaves only ``__tmp``, which the next creating call overwrites; heal
+    never promotes it). ``write`` may return False to decline (a stats
+    probe found nothing to do); nothing is swapped then.
+
+    A reader racing the two renames can see a brief path-not-found and
+    should retry.
+    """
+    fs, P = _fs(spark, live)
+    stage, old = live + staging, f"{live}__old"
+    if not fs.exists(P(live)):
+        if fs.exists(P(stage)):
+            _rename(fs, P, stage, live)
+        elif create:
+            tmp = f"{live}__tmp"
+            if fs.exists(P(tmp)):
+                fs.delete(P(tmp), True)
+            write(tmp)
+            _rename(fs, P, tmp, live)
+            return True
+        else:
+            return False
+    for leftover in (old, stage):
+        if fs.exists(P(leftover)):
+            fs.delete(P(leftover), True)
+    if write(stage) is False:
+        return False
+    _rename(fs, P, live, old)
+    _rename(fs, P, stage, live)
+    fs.delete(P(old), True)
+    return True
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -174,11 +280,8 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     With an explicit probe, only genuine absence takes the first-batch
     path; real read errors propagate.
     """
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    fs, P = _fs(spark, path)
+    return bool(fs.exists(P(path)))
 
 
 def compact_artifact(
@@ -197,55 +300,27 @@ def compact_artifact(
     Cheap metadata probe first (one ``listStatus``): rewrite only when the
     part-file count exceeds ``max_files``. The rewrite coalesces to
     ``ceil(bytes / target_bytes_per_file)`` files — sized for row-group
-    locality at scale, not a blind ``coalesce(1)``.
-
-    Crash-safe swap (no reader ever sees duplicated or partial DATA):
-    write the compacted copy to ``{path}__compacting``, rename the live
-    dir to ``{path}__old``, rename staging into place, delete ``__old``.
-    Every invocation heals a previous crash first: a dangling staging dir
-    is discarded (its data is still fully present in the live dir), a
-    missing live dir with staging present is the between-renames window
-    (complete the swap), a leftover ``__old`` beside a live dir is
-    post-swap garbage (delete). Contract: single WRITER (the same
-    contract the appending sinks already require); an external reader
-    racing the two renames can observe a brief path-not-found and should
-    retry — it can never observe duplicate or partial rows.
+    locality at scale, not a blind ``coalesce(1)``. The swap and the
+    healing of a previous crash are :func:`commit_swap`'s; an absent
+    artifact is a no-op.
     """
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hconf = jsc.hadoopConfiguration()
+    fs, P = _fs(spark, path)
 
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
+    def write(staging: str):
+        parts = [
+            f
+            for f in fs.listStatus(P(path))
+            if f.isFile() and not f.getPath().getName().startswith("_")
+        ]
+        if len(parts) <= max_files:
+            return False
+        total_bytes = sum(f.getLen() for f in parts)
+        n_out = max(1, -(-total_bytes // target_bytes_per_file))  # ceil div
+        spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(
+            staging
+        )
 
-    fs = P(path).getFileSystem(hconf)
-    staging, old = f"{path}__compacting", f"{path}__old"
-    # ---- heal prior crash ----
-    if not fs.exists(P(path)):
-        if fs.exists(P(staging)):  # crashed between the two renames
-            fs.rename(P(staging), P(path))
-        else:
-            return False  # artifact genuinely absent
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(staging)):
-        fs.delete(P(staging), True)
-    # ---- stats probe ----
-    parts = [
-        f
-        for f in fs.listStatus(P(path))
-        if f.isFile() and not f.getPath().getName().startswith("_")
-    ]
-    if len(parts) <= max_files:
-        return False
-    total_bytes = sum(f.getLen() for f in parts)
-    n_out = max(1, -(-total_bytes // target_bytes_per_file))  # ceil div
-    # ---- rewrite + swap ----
-    spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(staging)
-    fs.rename(P(path), P(old))
-    fs.rename(P(staging), P(path))
-    fs.delete(P(old), True)
-    return True
+    return commit_swap(spark, path, write)
 
 
 def _key_bucket(key_cols: list[str], n_buckets: int) -> Column:
@@ -926,9 +1001,11 @@ class TableStore:
         each update is O(batch) + a tiny merge; the union-then-re-minimize
         merge is exact (:func:`operators.curation.kmv_merge`), so the
         resulting sketch is identical to one built over all batches at
-        once regardless of arrival order. Swap is write-tmp-then-rename —
-        a reader never sees a half-written sketch; single writer is the
-        caller's contract (holds inside foreachBatch by construction).
+        once regardless of arrival order. The merged sketch replaces the
+        live one through :func:`commit_swap` (the first sketch is created
+        through it), so a crash at any point leaves the whole-history
+        sketch recoverable; single writer is the caller's contract (holds
+        inside foreachBatch by construction).
         """
         from activecampaign_api_data_pipeline_spark.operators.curation import (
             kmv_merge,
@@ -937,21 +1014,17 @@ class TableStore:
 
         path = self._kmv_path(table, value_col)
         new = kmv_state(batch_df, value_col, group_cols, k)
-        if self._exists(path):
-            old = self.spark.read.parquet(path)
-            merged = kmv_merge(old, new, group_cols, k)
-        else:
-            merged = new
-        tmp = path + "__tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(path)
-        fs = dst.getFileSystem(hconf)
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        fs.rename(src, dst)
+
+        def write(target: str) -> None:
+            # live exists here unless this call creates the first sketch
+            merged = (
+                kmv_merge(self.spark.read.parquet(path), new, group_cols, k)
+                if self._exists(path)
+                else new
+            )
+            merged.coalesce(1).write.mode("overwrite").parquet(target)
+
+        commit_swap(self.spark, path, write, create=True)
 
     def kmv_stats(self, table: str, value_col: str, k: int = 32) -> DataFrame:
         """Distinct-count estimates from the persisted sketch."""

@@ -36,6 +36,7 @@ from activecampaign_api_data_pipeline_spark.storage import (
     compact_artifact,
     max_id_watermark,
     path_exists,
+    probe_params,
 )
 
 WATERMARK_KEY = "max_id"
@@ -352,23 +353,12 @@ def stream_into_ann_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # explicit probe, not bare try/except: a transient read failure
-        # must not masquerade as "no index" and trigger a rebuild over an
-        # existing path (storage.path_exists rationale). But existence
-        # alone conflates "complete index" with "crashed first-batch
-        # build": build_* writes a '_building_' params.json FIRST, so a
-        # crash mid-build leaves a sidecar that parses as garbage and
-        # would wedge every replay on the append path. Mirror
-        # ensure_ann_index: rebuild on an unparsable sidecar, let genuine
-        # IO errors (read.text/collect failures) propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                AIX.load_ann_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False  # '_building_' marker or junk sidecar
-        if not complete:
+        # the kernel's completeness probe: build when the sidecar is
+        # absent, the building marker (a crashed first-batch build, which
+        # would otherwise wedge every replay on the append path) or
+        # unparsable; a genuine IO error propagates instead of
+        # masquerading as "no index" and rebuilding over an existing path
+        if probe_params(spark, path) is None:
             AIX.build_ann_index(batch_df, path, **(build_params or {}))
             return
         seen = spark.read.parquet(f"{path}/codes").select(
@@ -794,18 +784,8 @@ def stream_into_sq8_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # same crashed-build self-heal as stream_into_ann_index: rebuild
-        # when the sidecar is absent OR fails to parse as valid params
-        # (the '_building_' marker build_sq8_index writes first); only
-        # genuine IO errors propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                AIX.load_sq8_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        # same crashed-build self-heal as stream_into_ann_index
+        if probe_params(spark, path) is None:
             AIX.build_sq8_index(batch_df, path)
             return
         seen = spark.read.parquet(f"{path}/codes").select(F.col(id_col)).distinct()
@@ -856,17 +836,8 @@ def stream_into_text_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        # crashed-build self-heal: rebuild when the sidecar is absent OR
-        # fails to parse as valid params (the '_building_' marker
-        # build_text_index writes first); genuine IO errors propagate.
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                TIX.load_text_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        # same crashed-build self-heal as stream_into_ann_index
+        if probe_params(spark, path) is None:
             TIX.build_text_index(batch_df, path)
             return
         seen = spark.read.parquet(f"{path}/doclen").select(
@@ -917,8 +888,8 @@ def stream_into_matview(
     state needs: content-hash dedup cannot save a double-applied SUM.
 
     Crashed-build self-heal mirrors the text-index sink: a build that
-    died before the params sidecar landed leaves no parseable
-    ``params.json`` and the next batch rebuilds.
+    died before the params sidecar landed fails ``probe_params`` and the
+    next batch rebuilds.
     """
     from activecampaign_api_data_pipeline_spark.operators import matview as MV
 
@@ -941,14 +912,7 @@ def stream_into_matview(
             return
         spark = batch_df.sparkSession
         batch_key = f"batch_{batch_id:08d}"
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                MV.load_matview_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        if probe_params(spark, path) is None:
             # `measure` may be a single column name (legacy layout) or a
             # measure-SPEC list (multi-measure / avg / HLL view) — the
             # append path dispatches on the frozen params either way
@@ -995,7 +959,7 @@ def stream_into_hll_view(
     Exactly-once: the ``batch_id`` replay guard, same as the matview
     sink — max-merge registers are idempotent anyway, but the guard
     keeps the ``applied`` ledger truthful for compaction. Crashed-build
-    self-heal: no parseable params.json == next batch rebuilds."""
+    self-heal: a failed ``probe_params`` == next batch rebuilds."""
     from activecampaign_api_data_pipeline_spark.operators import hll_store as HS
     from activecampaign_api_data_pipeline_spark.operators import matview as MV
 
@@ -1008,14 +972,7 @@ def stream_into_hll_view(
             return
         spark = batch_df.sparkSession
         batch_key = f"batch_{batch_id:08d}"
-        complete = False
-        if path_exists(spark, f"{path}/params.json"):
-            try:
-                MV.load_matview_params(spark, path)
-                complete = True
-            except (TypeError, ValueError, KeyError, IndexError):
-                complete = False
-        if not complete:
+        if probe_params(spark, path) is None:
             HS.build_hll_view(
                 batch_df, path, key_cols, col, lg_k=lg_k, batch_key=batch_key
             )

@@ -404,6 +404,29 @@ def test_join_view_replay_guard_is_side_qualified(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_join_view_rejects_bad_side(spark):
+    # a ValueError, not an assert: under `python -O` a bad side must
+    # still raise before any history directory is written
+    import pytest
+
+    from activecampaign_api_data_pipeline_spark.operators.matview_join import (
+        append_join_side,
+        compact_join_history,
+    )
+
+    a = spark.createDataFrame([(1, 10)], "ok long, g long")
+    root = tempfile.mkdtemp(prefix="jv_s_")
+    try:
+        _jv_create(spark, root)
+        with pytest.raises(ValueError, match="side"):
+            append_join_side(a, root, "c", "k0")
+        with pytest.raises(ValueError, match="side"):
+            compact_join_history(spark, root, "c")
+        assert not glob.glob(f"{root}/c*")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_join_view_empty_delta_replay_cannot_double_count(spark):
     from activecampaign_api_data_pipeline_spark.operators.matview_join import (
         append_join_side,

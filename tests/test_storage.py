@@ -395,6 +395,36 @@ def test_update_kmv_incremental_equals_whole(spark, tmp_path):
     assert 300 * 0.5 < est["a"] < 300 * 1.7
 
 
+def test_update_kmv_heals_crash_between_renames(spark, tmp_path):
+    """A crash between the swap's two renames leaves no live sketch and a
+    complete staging copy. The next update must restore that copy and
+    fold into it — not take the "no sketch yet" branch and keep only the
+    new batch, silently losing every earlier distinct count."""
+    import shutil
+
+    from pyspark.sql import Row
+    from activecampaign_api_data_pipeline_spark.operators.curation import (
+        kmv_estimate,
+        kmv_state,
+    )
+
+    store = TableStore(spark, str(tmp_path / "lake"))
+    b1 = spark.createDataFrame([Row(g="a", v=f"t{i}") for i in range(200)])
+    b2 = spark.createDataFrame(
+        [Row(g="a", v=f"t{i}") for i in range(100, 300)] + [Row(g="b", v="x")]
+    )
+    store.update_kmv("docs", b1, "v", ["g"], k=16)
+    path = store._kmv_path("docs", "v")
+    shutil.copytree(path, path + "__compacting")
+    shutil.rmtree(path)
+    store.update_kmv("docs", b2, "v", ["g"], k=16)
+    whole = kmv_state(b1.union(b2), "v", ["g"], k=16)
+    got = {r["g"]: r["kmv"] for r in spark.read.parquet(path).collect()}
+    assert got == {r["g"]: r["kmv"] for r in whole.collect()}
+    est = sorted(map(tuple, store.kmv_stats("docs", "v", k=16).collect()))
+    assert est == sorted(map(tuple, kmv_estimate(whole, 16).collect()))
+
+
 def test_update_kmv_replay_idempotent(spark, tmp_path):
     from pyspark.sql import Row
 
@@ -589,6 +619,221 @@ def test_compact_artifact_rewrites_and_heals(spark, tmp_path):
     assert not path_exists(spark, path + "__old")
     # absent artifact: no-op
     assert compact_artifact(spark, str(tmp_path / "missing"), max_files=4) is False
+
+
+# ------------------------------------------- crash-window matrix (swaps)
+#
+# Every caller of storage.commit_swap, each set up as a tiny store. A case
+# returns (live dir, staging suffix, run, read): ``run`` invokes the
+# caller, ``read`` is what a reader of the store sees.
+
+
+def _swap_artifact(spark, root):
+    from activecampaign_api_data_pipeline_spark.storage import compact_artifact
+
+    path = f"{root}/artifact"
+    for b in range(10):
+        spark.range(b * 10, (b + 1) * 10).coalesce(1).write.mode("append").parquet(path)
+    return (
+        path,
+        "__compacting",
+        lambda: compact_artifact(spark, path, max_files=4),
+        lambda: sorted(r["id"] for r in spark.read.parquet(path).collect()),
+    )
+
+
+def _facts(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr("id % 5 AS k", "id AS v", "id % 7 AS u")
+
+
+def _swap_matview(spark, root):
+    from activecampaign_api_data_pipeline_spark.operators import matview as MV
+
+    path = f"{root}/mv"
+    MV.build_matview(_facts(spark, 0, 40), path, ["k"], "v", batch_key="b0")
+    MV.append_matview(_facts(spark, 40, 80), path, "b1")
+    return (
+        f"{path}/partials",
+        "__compacting",
+        lambda: MV.compact_matview(spark, path),
+        lambda: sorted(map(tuple, MV.read_matview(spark, path).collect())),
+    )
+
+
+def _swap_hll(spark, root):
+    from activecampaign_api_data_pipeline_spark.operators import hll_store as HS
+
+    path = f"{root}/hll"
+    HS.build_hll_view(_facts(spark, 0, 40), path, ["k"], "u", batch_key="b0")
+    HS.append_hll_view(_facts(spark, 40, 80), path, "b1")
+    return (
+        f"{path}/partials",
+        "__compacting",
+        lambda: HS.compact_hll_view(spark, path),
+        lambda: sorted(map(tuple, HS.read_hll_view(spark, path).collect())),
+    )
+
+
+def _swap_join_history(spark, root):
+    from activecampaign_api_data_pipeline_spark.operators import matview_join as JV
+
+    path = f"{root}/jv"
+    JV.create_join_view(spark, path, join_key="ok", group_cols=["g"], measure="m", n_buckets=4)
+    a = spark.createDataFrame([(1, 10), (2, 20), (3, 10)], "ok long, g long")
+    b = spark.createDataFrame([(1, 5), (2, 7), (3, 9)], "ok long, m long")
+    JV.append_join_side(a.where("ok < 3"), path, "a", "k0")
+    JV.append_join_side(b, path, "b", "k0")
+    JV.append_join_side(a.where("ok = 3"), path, "a", "k1")
+    live = f"{path}/a"
+
+    def read():
+        hist = spark.read.option("basePath", live).parquet(live).drop("batch")
+        return (
+            sorted(map(tuple, JV.read_join_view(spark, path).collect())),
+            sorted(map(tuple, hist.collect())),
+        )
+
+    return live, "__compacting", lambda: JV.compact_join_history(spark, path, "a"), read
+
+
+def _swap_text_index(spark, root):
+    from activecampaign_api_data_pipeline_spark.operators import text_index as TIX
+
+    path = f"{root}/tix"
+    docs = spark.createDataFrame(
+        [(i, f"spark join query {'skew ' * (i % 3)}doc{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    TIX.build_text_index(docs.where("doc_id < 8"), path, tok_buckets=4)
+    TIX.append_text_index(docs.where("doc_id >= 8"), path)
+
+    def read():
+        postings = spark.read.parquet(f"{path}/postings").select("tok", "doc_id", "tf")
+        return (
+            TIX.bm25_search_index(spark, path, ["spark", "skew"], k=20).collect(),
+            sorted(map(tuple, postings.collect())),
+        )
+
+    return (
+        f"{path}/postings",
+        "__compacting",
+        lambda: TIX.compact_text_index(spark, path, tok_buckets=4),
+        read,
+    )
+
+
+def _swap_ann_vacuum(spark, root):
+    import random
+
+    from activecampaign_api_data_pipeline_spark.operators import ann_index as AIX
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    path = f"{root}/ann"
+    AIX.build_ann_index(emb, path, n_centroids=2, m=2, ksub=2, n_iters=1)
+
+    def run():
+        # re-deleting vacuumed ids is vacuous, but gives vacuum a ledger
+        # to act on (no ledger means no swap at all)
+        AIX.delete_ann_index(spark, path, [1, 2])
+        AIX.vacuum_ann_index(spark, path)
+
+    def read():
+        return tuple(
+            sorted(map(tuple, spark.read.parquet(f"{path}/{a}").collect()))
+            for a in ("cells", "codes")
+        )
+
+    return f"{path}/cells", "__compacting", run, read
+
+
+def _swap_zorder(spark, root):
+    from activecampaign_api_data_pipeline_spark.operators.layout import (
+        optimize_zorder,
+        pruned_read,
+        write_zordered,
+    )
+
+    path = f"{root}/z"
+    df = spark.range(120).selectExpr("id % 17 AS a", "id % 23 AS b", "id")
+    write_zordered(df, path, "a", "b", n_files=2, bits=8)
+
+    def read():
+        pruned, _, _ = pruned_read(spark, path, {"a": (3, 9)})
+        return (
+            sorted(map(tuple, spark.read.parquet(path).collect())),
+            sorted(map(tuple, pruned.where("a BETWEEN 3 AND 9").collect())),
+        )
+
+    return (
+        path,
+        "__optimizing",
+        lambda: optimize_zorder(spark, path, "a", "b", n_files=2, bits=8),
+        read,
+    )
+
+
+def _swap_kmv(spark, root):
+    store = TableStore(spark, f"{root}/lake")
+    store.update_kmv("t", _facts(spark, 0, 60), "v", ["k"], k=8)
+    store.update_kmv("t", _facts(spark, 40, 100), "v", ["k"], k=8)
+    path = store._kmv_path("t", "v")
+    return (
+        path,
+        "__compacting",
+        # a replayed batch folds idempotently (KMV merge is exact)
+        lambda: store.update_kmv("t", _facts(spark, 40, 100), "v", ["k"], k=8),
+        lambda: sorted(map(tuple, spark.read.parquet(path).collect())),
+    )
+
+
+_SWAP_CASES = {
+    "compact_artifact": _swap_artifact,
+    "compact_matview": _swap_matview,
+    "compact_hll_view": _swap_hll,
+    "compact_join_history": _swap_join_history,
+    "compact_text_index": _swap_text_index,
+    "vacuum_ann_index": _swap_ann_vacuum,
+    "optimize_zorder": _swap_zorder,
+    "update_kmv": _swap_kmv,
+}
+
+
+@pytest.mark.parametrize("caller", list(_SWAP_CASES))
+def test_swap_crash_windows(spark, tmp_path, caller):
+    """Each swap caller heals all three crash windows of
+    ``storage.commit_swap`` on its next call, and the store reads the
+    same before and after every one: (A) a crashed staging write beside
+    live, (B) the between-renames window (live renamed to ``__old``, the
+    complete staging copy not yet renamed in), (C) a leftover ``__old``
+    after the swap."""
+    import os
+    import shutil
+
+    live, staging, run, read = _SWAP_CASES[caller](spark, str(tmp_path))
+    run()
+    want = read()
+    stage, old = live + staging, live + "__old"
+
+    def crash_a():
+        shutil.copytree(live, stage)
+
+    def crash_b():
+        shutil.copytree(live, stage)
+        os.rename(live, old)
+
+    def crash_c():
+        shutil.copytree(live, old)
+
+    for window in (crash_a, crash_b, crash_c):
+        window()
+        run()
+        assert read() == want, window.__name__
+        assert os.path.isdir(live), window.__name__
+        assert not os.path.exists(stage) and not os.path.exists(old), window.__name__
 
 
 def test_gold_asof_checkpoint_bit_equal_and_survives_vacuum(spark, tmp_path):
